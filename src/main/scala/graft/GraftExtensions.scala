@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.VectorExpressions
 
 /** Library packaging of the engine's Catalyst surface: register with
@@ -21,9 +20,6 @@ import graft.functions.VectorExpressions
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
     VectorExpressions.kernels.foreach { case (name, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(VectorExpressions.getClass.getName, name),
-        builder))
+      ext.injectFunction((FunctionIdentifier(name), VectorExpressions.info(name), builder))
     }
 }

@@ -66,6 +66,15 @@ object GraftSession {
       // the cache stores compiled classes, so the cost is a few tens of
       // MB of metaspace, not data memory.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // Every session shares one classloader (a per-session setting,
+      // read only at creation). Spark keys its generated-class cache by
+      // (classloader, source); with artifact isolation on, each cloned
+      // session — every streaming query run, so every AvailableNow
+      // ingest invocation — gets a classloader of its own, and Janino
+      // compiles the same classes again (55 per IngestStream.start, 54
+      // byte-identical to the previous run's). Isolation only separates
+      // JARs/files added to a session as artifacts; the engine adds none.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // Force the SORT shuffle-write path at every partition count
       // (r17, the measured root cause of the r16 32-core bench
       // anomalies): with R ≤ 200 reduce partitions and no map-side
@@ -96,7 +105,8 @@ object GraftSession {
     // semantics-bearing settings above are all runtime SQL confs, so
     // re-assert them on whatever session came back; the kernels are
     // registered imperatively for the same reason (the extensions hook
-    // only fires for sessions built with it).
+    // only fires for sessions built with it; `register` skips the
+    // kernels it already injected).
     Seq(
       "spark.sql.shuffle.partitions" -> nShuffle,
       "spark.sql.session.timeZone" -> "UTC",

@@ -1,9 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
@@ -1018,13 +1019,24 @@ object VectorExpressions {
     "simhash128" -> (args => Simhash128(args(0))),
     "simhash128mix" -> (args => Simhash128Mix(args(0))))
 
-  /** Register every kernel on the session (idempotent). Called from
-    * [[graft.GraftSession]]; query builders also call it defensively so
-    * they work on any externally-built session.
+  /** The function-registry entry of a kernel; [[graft.GraftExtensions]]
+    * injects the same one, which is how [[register]] recognizes it. */
+  def info(name: String): ExpressionInfo =
+    new ExpressionInfo(getClass.getName, name)
+
+  /** Register every kernel on the session that does not already hold
+    * it (idempotent). Called from [[graft.GraftSession]]; query builders
+    * also call it defensively so they work on any externally-built
+    * session. A kernel [[graft.GraftExtensions]] injected, or an earlier
+    * call registered, is kept as it is: registering it again would log
+    * a "replaced a previously registered function" warning each time.
     */
-  def register(spark: SparkSession): Unit =
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     kernels.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
+      val id = FunctionIdentifier(name)
+      if (!registry.lookupFunction(id).exists(_.getClassName == getClass.getName))
+        registry.registerFunction(id, info(name), builder)
     }
+  }
 }

@@ -47,16 +47,18 @@ object FarmSchema {
   val requiredKeys: Seq[String] =
     Seq("event_id", "timestamp", "sensor_data", "weather_data", "location")
 
-  /** Top-level-key presence test. Needed because `from_json` cannot
+  /** The payload's top-level key names; a key is present when
+    * `array_contains` finds it here. Needed because `from_json` cannot
     * distinguish an absent key from an explicit null value, but the
     * reference's missing_top_level_key error can (lamda.py:84:
     * `if key not in data`). Uses `json_object_keys` — exact top-level
     * semantics; a regex text probe would also match the key name
-    * nested inside another object. Repeated calls over the same row
-    * collapse to one parse via Catalyst subexpression elimination.
+    * nested inside another object. Each call is a JSON scan of the
+    * payload, and the optimizer does not merge repeated calls into one:
+    * compute it once per record as a column and test that column (as
+    * [[graft.rules.Validation]] does).
     */
-  def keyPresent(raw: Column, key: String): Column =
-    array_contains(json_object_keys(raw), key)
+  def topLevelKeys(raw: Column): Column = json_object_keys(raw)
 
   /** True when the sensor value arrived as a *quoted* JSON string — the
     * condition for the reference's type-converted warning

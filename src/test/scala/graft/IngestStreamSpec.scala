@@ -167,6 +167,36 @@ class IngestStreamSpec extends AnyFunSuite {
     assert(observed.map(_.getLong(1)).sum === 1) // n_invalid
   }
 
+  test("a restarted invocation reuses the previous invocation's generated classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // every AvailableNow invocation runs on a cloned session; the
+    // generated record-path classes must come from the codegen cache,
+    // not from Janino again (55 compilations per invocation when each
+    // cloned session had a classloader of its own)
+    val src = Files.createTempDirectory("graft-src")
+    val lake = Files.createTempDirectory("graft-lake").toString
+    val alerts = Files.createTempDirectory("graft-alerts").toString
+    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    def invoke(name: String): Unit = {
+      Files.writeString(src.resolve(s"$name.jsonl"), Seq(
+        FarmFixtures.record(eventId = s"evt_${name}_a"),
+        FarmFixtures.record(
+          sensors = FarmFixtures.withSensor("temperature", "52.0"),
+          weatherTemp = Some("45.0"),
+          eventId = s"evt_${name}_b"),
+        "[7, 8, 9]").mkString("\n"))
+      val (lakeQ, alertQ) = IngestStream.start(
+        IngestStream.fileSource(spark, src.toString), lake, alerts, ckpt)
+      assert(lakeQ.awaitTermination(120000) && alertQ.awaitTermination(120000))
+    }
+    invoke("first")
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    invoke("second")
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled <= 5, s"$compiled Janino compilations on the second invocation")
+    assert(spark.read.json(lake).count() === 6)
+  }
+
   test("warning route is a subdirectory of valid (reference key layout)") {
     // The sink partitions by the route value; Spark escapes '/' in
     // partition values on disk but restores it on read — the logical

@@ -585,4 +585,30 @@ class PlanShapeSpec extends AnyFunSuite {
       CacheScope.drain()
     }
   }
+
+  test("the ingest record path optimizes to a small expression tree") {
+    import graft.rules.Validation
+    import graft.schema.FarmSchema
+    import graft.stream.IngestStream
+    // every micro-batch of the ingest stream re-plans this path, so its
+    // size is a per-invocation fixed cost: analysis, optimization,
+    // codegen and Janino compilation all scale with it. Built as one
+    // expression per output it optimized to 12,623 expression nodes;
+    // the staged validator keeps each shared per-record value in one
+    // internal column (Validation's plan-layout note).
+    val dir = java.nio.file.Files.createTempDirectory("plan-size")
+    java.nio.file.Files.writeString(dir.resolve("events.jsonl"),
+      Seq(FarmFixtures.record(), "[1, 2, 3]").mkString("\n"))
+    val raw = spark.read.text(dir.toString).withColumnRenamed("value", "raw")
+    val plan = IngestStream.process(raw).queryExecution.optimizedPlan
+    val nodes = plan.collect { case p => p.expressions.map(_.collect { case e => e }.size).sum }.sum
+    assert(nodes <= 3000, s"record path optimizes to $nodes expression nodes:\n$plan")
+
+    // the staging is internal: exactly the input columns, then the
+    // validation outputs in the documented order — no `_` column leaks
+    val parsed = FarmSchema.parse(raw, "raw")
+    assert(Validation.annotate(parsed).columns.toSeq === parsed.columns.toSeq ++
+      Seq("validation_errors", "validation_warnings", "validation_status") ++
+      FarmSchema.sensorFields.map(s => s"sensor_$s"))
+  }
 }
